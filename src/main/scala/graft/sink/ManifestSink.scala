@@ -1,66 +1,26 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
-/** Generic exactly-once parquet sink for arbitrary streaming frames —
-  * the same manifest protocol as [[ExactlyOnceSink]] (per-batch directory
-  * + atomically-published commit marker; a replayed batch after restart is
-  * a no-op; readers see committed batches only) without the
-  * validation-specific routing. Used by the streaming curation pipeline.
+/** Generic exactly-once parquet sink for arbitrary streaming frames — the
+  * [[Manifest]] protocol over a single `data` table, without the
+  * validation-specific route views of [[ExactlyOnceSink]]. Used by the
+  * streaming curation, quality and ANN pipelines.
   */
 final class ManifestSink(outDir: String) extends Serializable {
 
-  private def marker(batchId: Long) = Paths.get(s"$outDir/_commits/$batchId")
+  private val manifest = new Manifest(outDir, "data")
 
-  def isCommitted(batchId: Long): Boolean = Files.exists(marker(batchId))
+  def isCommitted(batchId: Long): Boolean = manifest.isCommitted(batchId)
 
   /** Idempotent per-batch write: data lands under `data/batch_id=N`, the
-    * commit marker is published by ATOMIC_MOVE after the write completes —
-    * a torn write leaves files but no marker, and the replay overwrites.
+    * commit marker is published after the write completes — a torn write
+    * leaves files but no marker, and the replay overwrites.
     */
-  def writeBatch(df: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return
-    df.write.mode("overwrite").parquet(s"$outDir/data/batch_id=$batchId")
-    Files.createDirectories(Paths.get(s"$outDir/_commits"))
-    val tmp = Paths.get(s"$outDir/_commits/.tmp_$batchId")
-    Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, marker(batchId), StandardCopyOption.ATOMIC_MOVE)
-  }
+  def writeBatch(df: DataFrame, batchId: Long): Unit =
+    manifest.writeOnce(batchId)(df.write.mode("overwrite").parquet(_))
 
-  /** Committed-only view. Filters out the UNCOMMITTED partitions (bounded
-    * by in-flight writers) rather than isin-ing the committed set (which
-    * grows with stream lifetime — see ExactlyOnceSink.read).
-    */
-  def read(spark: SparkSession): DataFrame = {
-    val d = new java.io.File(s"$outDir/data")
-    if (!d.exists()) return spark.emptyDataFrame
-    val present = d.listFiles().iterator
-      .filter(f => f.isDirectory && f.getName.startsWith("batch_id="))
-      .map(_.getName.stripPrefix("batch_id=").toLong).toSet
-    if (present.isEmpty) return spark.emptyDataFrame
-    val committed = {
-      val c = new java.io.File(s"$outDir/_commits")
-      if (!c.exists()) Set.empty[Long]
-      else c.listFiles().iterator.map(_.getName)
-        .filter(_.forall(_.isDigit)).map(_.toLong).toSet
-    }
-    val uncommitted = present -- committed
-    val committedPresent = present -- uncommitted
-    if (committedPresent.isEmpty) return spark.emptyDataFrame
-    // Schema comes from ONE committed batch dir, then is passed explicitly:
-    // schema INFERENCE over the whole data/ dir would sample footers of
-    // torn files in uncommitted dirs and could throw — violating
-    // "readers see committed batches only" before the partition filter
-    // (which prunes those dirs at file listing) ever runs.
-    val schema = spark.read
-      .parquet(s"$outDir/data/batch_id=${committedPresent.head}").schema
-    val all = spark.read.schema(schema.add("batch_id", "long"))
-      .parquet(s"$outDir/data")
-    if (uncommitted.isEmpty) all
-    else all.filter(!col("batch_id").isin(uncommitted.toSeq: _*))
-  }
+  /** Committed-only view with a `batch_id` column. */
+  def read(spark: SparkSession): DataFrame =
+    manifest.read(spark).getOrElse(spark.emptyDataFrame)
 }

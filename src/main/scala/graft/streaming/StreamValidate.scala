@@ -10,7 +10,9 @@ import graft.validate.ValidationPipeline
 
 /** The streaming topology: `readStream(transcripts) → dedup state →
   * validate (same stages as batch — parity by construction) →
-  * foreachBatch exactly-once 3-way sink` (SURVEY.md §3.1 Spark equivalent).
+  * foreachBatch exactly-once sink` (SURVEY.md §3.1 Spark equivalent): one
+  * `decisions` table per batch; the `valid` / `rejected` / `webdata` routes
+  * are committed views of it ([[graft.sink.ExactlyOnceSink]]).
   *
   * Source is a schema'd parquet-dir file stream (the local stand-in for
   * the Iceberg streaming source — no Iceberg jars offline, SURVEY.md §7.6;

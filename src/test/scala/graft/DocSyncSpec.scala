@@ -11,19 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DocSyncSpec extends AnyFunSuite {
 
+  // Paths resolve against the working directory: sbt forks tests from
+  // the project base.
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
   private val recordPath: String = {
-    val dir = new java.io.File("/root/repo/BENCH")
-    val recs = dir.listFiles().map(_.getName)
+    val recs = Option(new java.io.File("BENCH").listFiles()).toSeq.flatten.map(_.getName)
       .filter(n => n.matches("bench_r\\d+_record\\.json"))
       .sortBy(n => "\\d+".r.findFirstIn(n).get.toInt)
-    s"/root/repo/BENCH/${recs.last}"
+    if (recs.isEmpty)
+      fail(s"no promoted bench record: expected BENCH/bench_r<N>_record.json under " +
+        new java.io.File("BENCH").getAbsolutePath)
+    s"BENCH/${recs.last}"
   }
   private val rec = readFile(recordPath)
-  private val baseline = readFile("/root/repo/BENCH/BASELINE.md")
-  private val readme = readFile("/root/repo/README.md")
+  private val baseline = readFile("BENCH/BASELINE.md")
+  private val readme = readFile("README.md")
 
   private def num(field: String): Double =
     ("\"" + field + "\":\\s*(-?[0-9.]+)").r.findFirstMatchIn(rec)

@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
 
     // torn write: data landed for batch 8 but no commit marker
     dec.limit(3).withColumn("partition_id", spark_partition_id())
-      .write.mode("overwrite").parquet(s"$out/valid/batch_id=8")
+      .write.mode("overwrite").parquet(s"$out/decisions/batch_id=8")
     assert(sink.read(spark, "valid").count() == n1, "uncommitted batch visible")
     sink.writeBatch(dec, 8L) // repair overwrites the torn partition
     assert(sink.read(spark, "valid").filter($"batch_id" === 8).count() ==
