@@ -140,6 +140,23 @@ class QualityOpsSpec extends SparkSpec {
       s"window partition keys missing the md5 bucket: $winSpecs")
   }
 
+  test("stratified sample: int strata keep their type and sample like their string form") {
+    val ints = spark.range(3000).select(col("id").as("doc_id"),
+      (col("id") % 7 % 3).cast("int").as("tier"))
+    val out = Sampling.stratifiedSample(ints, "tier", 0.1)
+    assert(out.schema("tier").dataType == org.apache.spark.sql.types.IntegerType)
+    val asStrings = Sampling.stratifiedSample(
+      ints.withColumn("tier", col("tier").cast("string")), "tier", 0.1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("doc_id"), col("tier").cast("string"), col("rk"), col("n_take"))
+        .orderBy("doc_id").collect().toSeq
+    assert(rows(out) === rows(asStrings))
+    val got = out.groupBy("tier").count().as[(Int, Long)].collect().toMap
+    val want = ints.groupBy("tier").count().as[(Int, Long)].collect().toMap
+      .map { case (t, n) => t -> math.ceil(n * 0.1).toLong }
+    assert(got === want)
+  }
+
   // ----------------------------------------------------------------- sqTopK
 
   test("sq top-k: int8 quantization keeps high recall vs exact brute force") {

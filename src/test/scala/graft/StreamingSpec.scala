@@ -225,6 +225,43 @@ class StreamingSpec extends SparkSpec {
     assert(rows.length == 4, rows.mkString(","))
   }
 
+  /** Watermark 1 min, gap 5 min. C/0 at t=600 s sets C's deadline to
+    * 900 s. `second` reaches C in the next batch. D/0 at `probeSec` moves
+    * the watermark past the deadline `second` alone would set, but not
+    * past 900 s, so C must stay open: a replay of C/0 just above the
+    * watermark is still a duplicate.
+    */
+  private def dedupDeadlineHolds(name: String, second: Turn, probeSec: Long): Unit = {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val q = DedupState.dedup(spark, mem.toDS(), "1 minute", "5 minutes")
+      .writeStream.outputMode("append").format("memory").queryName(name).start()
+    def t(c: String, i: Int, sec: Long) = Turn(c, i, "user", s"m$i", null, ts(sec))
+    try {
+      for (batch <- Seq(t("C", 0, 600), second, t("D", 0, probeSec),
+          t("C", 0, probeSec - 55))) {
+        mem.addData(batch)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val rows = spark.table(name).select("conv_id", "turn_idx")
+      .as[(String, Int)].collect().sorted.toSeq
+    assert(rows == Seq(("C", 0), ("C", 1), ("D", 0)), s"got $rows")
+  }
+
+  test("stateful dedup: an out-of-order turn never pulls the close deadline earlier") {
+    // C/1 at 560 s (above the 540 s watermark) alone would close C at 860 s
+    dedupDeadlineHolds("dedup_ooo_deadline",
+      Turn("C", 1, "user", "m1", null, ts(560)), probeSec = 925)
+  }
+
+  test("stateful dedup: a null-ts batch never pulls the close deadline earlier") {
+    // a null-ts batch alone would close C at watermark + gap = 840 s
+    dedupDeadlineHolds("dedup_null_deadline",
+      Turn("C", 1, "user", "m1", null, null), probeSec = 905)
+  }
+
   test("stateful dedup runs on the RocksDB state store provider") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
